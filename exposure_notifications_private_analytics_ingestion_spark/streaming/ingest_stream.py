@@ -4,12 +4,13 @@ re-expressed as a continuous CEP pipeline.
 Reference semantics → streaming mapping (SURVEY §2/§3):
 - hourly scan window + ±grace re-scan  → event-time watermark = grace hours
   (``IngestionPipelineOptions.java:141-163``)
-- Distinct on document path            → keyed dedup state per conv_id
+- Distinct on document path            → dedup set per conv_id in state
   (``IngestionPipeline.java:110-119``)
 - GroupIntoBatches + batch-id          → ``applyInPandasWithState`` keyed by
-  ``conv_id``: open-batch buffer in state, closed on size OR when the
-  watermark passes the turn's tumbling-window end (event-time timeout) —
-  late rows after a close open a NEW batch, never mutate a written one
+  ``hash(conv_id) % bucket_by``: each bucket's state holds its
+  conversations' open-batch buffers, closed on size OR when the watermark
+  passes the turn's tumbling-window end (event-time timeout) — late rows
+  after a close open a NEW batch, never mutate a written one
 - Avro triplet write w/ deterministic  → idempotent ``foreachBatch``: every
   file UUID (``BatchWriterFn.java:140-150``)  epoch writes packets + headers
   under an epoch-keyed path with overwrite, so Spark's epoch-retry lands on
@@ -28,7 +29,7 @@ from __future__ import annotations
 
 import uuid as _uuid
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -49,13 +50,13 @@ class StreamOptions:
     mode: str = "tumbling"  # 'tumbling' | 'session' (gap-close, north_rule)
     session_gap_s: int = 1800
     max_files_per_trigger: int = 64  # source micro-batch sizing
-    # state bucketing: key the stateful operator by hash(conv_id) % bucket_by
-    # instead of raw conv_id, amortizing per-group overhead (state get/put,
-    # Arrow framing, pandas construction — measured ~1.4 ms/group-call) over
-    # ~n_convs/bucket_by conversations per state entry. None = per-conv keys
-    # (the reference-shaped layout). Output is bit-identical either way —
-    # tests assert equality — because windows, dedup, ordering, and batch ids
-    # all derive from per-conv row data, never from the grouping key.
+    # state buckets: the stateful operator is keyed by hash(conv_id) %
+    # bucket_by, amortizing per-group overhead (state get/put, Arrow framing,
+    # pandas construction) over every conversation in a bucket. None =
+    # derived: the count recorded beside the checkpoint, else
+    # spark.sql.shuffle.partitions at first start (Spark pins the state
+    # partition count the same way). Output never depends on it — windows,
+    # dedup, ordering, and batch ids all derive from per-conv row data.
     bucket_by: int | None = None
     # optional attestation-fact stream (schema FACTS_SCHEMA): when set, turns
     # are inner-joined (watermarked stream-stream, time-range bound) to facts
@@ -92,27 +93,6 @@ BATCH_OUT_SCHEMA = T.StructType(
     ]
 )
 
-# state: per-conversation MAP of open windows (tumbling) or open sessions
-# (session mode). Parallel arrays indexed by open window; each window carries
-# its own dedup set, buffer, and ordinal counter. Multiple windows stay open
-# simultaneously because rows arrive out-of-order ACROSS microbatches within
-# the watermark horizon — a single-open-window state re-emits duplicates and
-# reuses batch ids when an earlier window is revisited (found at 2.4M-turn
-# scale; the reference sidesteps this by re-scanning whole hours in batch).
-# A window is evicted only when the watermark passes its end, so its ordinal
-# space is never reused and late rows within grace always land in live state.
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("w_start", T.ArrayType(T.LongType()), True),
-        T.StructField("w_next_ord", T.ArrayType(T.IntegerType()), True),
-        T.StructField("w_last_ts", T.ArrayType(T.LongType()), True),  # sessions
-        T.StructField("w_seen", T.ArrayType(T.ArrayType(T.IntegerType())), True),
-        T.StructField("w_buf_idx", T.ArrayType(T.ArrayType(T.IntegerType())), True),
-        T.StructField("w_buf_text", T.ArrayType(T.ArrayType(T.StringType())), True),
-        T.StructField("w_buf_ts", T.ArrayType(T.ArrayType(T.LongType())), True),
-    ]
-)
-
 
 def _batch_id(conv_id: str, window_start_s: int, ordinal: int) -> str:
     return str(
@@ -121,14 +101,17 @@ def _batch_id(conv_id: str, window_start_s: int, ordinal: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# shared per-conversation CEP core — ONE implementation drives both state
-# layouts (per-conv keys and hash-bucketed keys), so their semantics cannot
-# diverge. All functions are pure Python over plain dicts/lists: no Spark
-# objects, picklable, unit-testable without a session.
+# per-conversation CEP core, run for each conversation inside a bucket (and
+# by the batch twin ``queries.q_batch_assembly_bucketed``). All functions are
+# pure Python over plain dicts/lists: no Spark objects, picklable,
+# unit-testable without a session.
 #
 # wins: window_start_s -> [next_ord, last_ts_ms, seen:set,
 #                          bidx:list, btxt:list, bts:list]
 # out:  columnar accumulators (dict-of-lists -> one pdf at the end)
+# Several windows stay open at once because rows arrive out of order ACROSS
+# microbatches within the watermark horizon; a window is evicted only when
+# the watermark passes its end, so its ordinal space is never reused.
 # ---------------------------------------------------------------------------
 
 
@@ -286,103 +269,23 @@ def _evict_expired(
             del wins[w]
 
 
-def _ts_ms_of(pdf: pd.DataFrame):
-    # vectorized ts->ms (never per-row pd.Timestamp)
-    return pdf["ts"].to_numpy(dtype="datetime64[us]").astype("int64") // 1000
-
-
-def make_assembler(opts: StreamOptions):
-    """Returns the per-conversation applyInPandasWithState function. Pure
-    (no closure over Spark objects) so it pickles cleanly to executors."""
-    batch_size = opts.batch_size
-    window_s = opts.window_s
-    flush = opts.flush_partial_on_timeout
-    session_mode = opts.mode == "session"
-    gap_ms = opts.session_gap_s * 1000
-
-    def assemble(
-        key: tuple,
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        wins: dict[int, list] = {}
-        if state.exists:
-            ws, nords, lasts, seens, bidxs, btxts, btss = state.get
-            for i, w in enumerate(ws):
-                wins[w] = [
-                    nords[i], lasts[i], set(seens[i]),
-                    list(bidxs[i]), list(btxts[i]), list(btss[i]),
-                ]
-
-        out = _new_out()
-
-        def save_and_arm():
-            if not wins:
-                state.remove()
-                return
-            items = sorted(wins.items())
-            state.update(
-                (
-                    [w for w, _ in items],
-                    [e[0] for _, e in items],
-                    [e[1] for _, e in items],
-                    [sorted(e[2]) for _, e in items],
-                    [e[3] for _, e in items],
-                    [e[4] for _, e in items],
-                    [e[5] for _, e in items],
-                )
-            )
-            wm = state.getCurrentWatermarkMs()
-            nxt = min(
-                _end_ms(w, e, session_mode, gap_ms, window_s)
-                for w, e in items
-            )
-            state.setTimeoutTimestamp(max(nxt, wm + 1))
-
-        if state.hasTimedOut:
-            _evict_expired(
-                out, conv_id, wins, state.getCurrentWatermarkMs(),
-                batch_size, window_s, session_mode, gap_ms, flush,
-            )
-            save_and_arm()
-            if out["idx"]:
-                yield _out_pdf(out)
-            return
-
-        for pdf in pdf_iter:
-            rows = sorted(
-                zip(_ts_ms_of(pdf).tolist(), pdf["turn_idx"].tolist(),
-                    pdf["text"].tolist())
-            )
-            _ingest_sorted(
-                out, conv_id, wins, rows,
-                batch_size, window_s, session_mode, gap_ms,
-            )
-
-        save_and_arm()
-        if out["idx"]:
-            yield _out_pdf(out)
-
-    return assemble
-
-
-# bucketed state layout: one binary blob per bucket — a pickled
-# {conv_id: wins} dict. Amortizes the per-group framework cost (state
-# get/put, Arrow framing, per-group pandas construction) over every
-# conversation in the bucket; one pickle per bucket per microbatch replaces
-# hundreds of per-conv array serializations.
-BUCKET_STATE_SCHEMA = T.StructType(
+# state layout: one binary blob per bucket — a pickled {conv_id: wins}
+# dict. Amortizes the per-group framework cost (state get/put, Arrow
+# framing, per-group pandas construction) over every conversation in the
+# bucket.
+STATE_BLOB_SCHEMA = T.StructType(
     [T.StructField("blob", T.BinaryType(), True)]
 )
 
 
 def make_bucketed_assembler(opts: StreamOptions):
-    """Returns the hash-bucket applyInPandasWithState function: state key is
+    """Returns the applyInPandasWithState function: state key is
     ``hash(conv_id) % bucket_by``; the blob holds every member conversation's
-    windows. Semantics are identical to make_assembler (same core functions,
-    same per-conv row order) — only the state partitioning differs."""
+    windows. Pure (no closure over Spark objects) so it pickles cleanly to
+    executors."""
     import pickle
+    from itertools import groupby
+    from operator import itemgetter
 
     batch_size = opts.batch_size
     window_s = opts.window_s
@@ -399,22 +302,8 @@ def make_bucketed_assembler(opts: StreamOptions):
             pickle.loads(state.get[0]) if state.exists else {}
         )
         out = _new_out()
-
-        def save_and_arm():
-            if not convs:
-                state.remove()
-                return
-            state.update((pickle.dumps(convs, protocol=5),))
-            wm = state.getCurrentWatermarkMs()
-            nxt = min(
-                _end_ms(w, e, session_mode, gap_ms, window_s)
-                for wins in convs.values()
-                for w, e in wins.items()
-            )
-            state.setTimeoutTimestamp(max(nxt, wm + 1))
-
+        wm = state.getCurrentWatermarkMs()
         if state.hasTimedOut:
-            wm = state.getCurrentWatermarkMs()
             for cid in list(convs):
                 wins = convs[cid]
                 _evict_expired(
@@ -423,35 +312,39 @@ def make_bucketed_assembler(opts: StreamOptions):
                 )
                 if not wins:
                     del convs[cid]
-            save_and_arm()
-            if out["idx"]:
-                yield _out_pdf(out)
-            return
-
-        from itertools import groupby
-        from operator import itemgetter
-
-        for pdf in pdf_iter:
-            # one sort by (conv, ts, idx, text): within each conv this is the
-            # exact row order the per-conv assembler processes
-            rows = sorted(
-                zip(
-                    pdf["conv_id"].tolist(),
-                    _ts_ms_of(pdf).tolist(),
-                    pdf["turn_idx"].tolist(),
-                    pdf["text"].tolist(),
+        else:
+            for pdf in pdf_iter:
+                # one sort by (conv, ts, idx, text): each conv sees its rows
+                # in the same order whichever conversations share its bucket
+                rows = sorted(
+                    zip(
+                        pdf["conv_id"].tolist(),
+                        # vectorized ts->ms (never per-row pd.Timestamp)
+                        (pdf["ts"].to_numpy(dtype="datetime64[us]")
+                         .astype("int64") // 1000).tolist(),
+                        pdf["turn_idx"].tolist(),
+                        pdf["text"].tolist(),
+                    )
                 )
+                for cid, grp in groupby(rows, key=itemgetter(0)):
+                    wins = convs.get(cid)
+                    if wins is None:
+                        wins = convs[cid] = {}
+                    _ingest_sorted(
+                        out, cid, wins, [r[1:] for r in grp],
+                        batch_size, window_s, session_mode, gap_ms,
+                    )
+
+        if convs:
+            state.update((pickle.dumps(convs, protocol=5),))
+            nxt = min(
+                _end_ms(w, e, session_mode, gap_ms, window_s)
+                for wins in convs.values()
+                for w, e in wins.items()
             )
-            for cid, grp in groupby(rows, key=itemgetter(0)):
-                wins = convs.get(cid)
-                if wins is None:
-                    wins = convs[cid] = {}
-                _ingest_sorted(
-                    out, cid, wins, [r[1:] for r in grp],
-                    batch_size, window_s, session_mode, gap_ms,
-                )
-
-        save_and_arm()
+            state.setTimeoutTimestamp(max(nxt, wm + 1))
+        else:
+            state.remove()
         if out["idx"]:
             yield _out_pdf(out)
 
@@ -472,7 +365,7 @@ def dedup_stream(df: DataFrame, watermark: str = "1 hour") -> DataFrame:
 def closed_batches_stream(
     spark: SparkSession, input_path: str, opts: StreamOptions
 ) -> DataFrame:
-    """readStream → watermark → keyed CEP state → closed-batch rows."""
+    """readStream → watermark → bucketed CEP state → closed-batch rows."""
     reader = spark.readStream.schema(TURNS_SCHEMA).option(
         "maxFilesPerTrigger", str(opts.max_files_per_trigger)
     )
@@ -504,27 +397,23 @@ def closed_batches_stream(
         with_wm = turns
     else:
         with_wm = turns.withWatermark("ts", opts.watermark)
-    if opts.bucket_by:
-        # hash-bucketed state (see StreamOptions.bucket_by): the shuffle key
-        # is the bucket, so the exchange and the state store see bucket_by
-        # keys instead of one per conversation
-        keyed = with_wm.withColumn(
-            "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(opts.bucket_by))
-        )
-        return keyed.groupBy("_bucket").applyInPandasWithState(
-            make_bucketed_assembler(opts),
-            outputStructType=BATCH_OUT_SCHEMA,
-            stateStructType=BUCKET_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    return with_wm.groupBy("conv_id").applyInPandasWithState(
-        make_assembler(opts),
+    # the shuffle key is the bucket, so the exchange and the state store see
+    # bucket_by keys instead of one per conversation
+    buckets = opts.bucket_by or _derived_bucket_by(spark)
+    keyed = with_wm.withColumn(
+        "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets))
+    )
+    return keyed.groupBy("_bucket").applyInPandasWithState(
+        make_bucketed_assembler(opts),
         outputStructType=BATCH_OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
+        stateStructType=STATE_BLOB_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
+
+
+def _derived_bucket_by(spark: SparkSession) -> int:
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 ROCKSDB_PROVIDER = (
@@ -532,10 +421,10 @@ ROCKSDB_PROVIDER = (
 )
 
 # Options whose change across a checkpoint resume corrupts or silently
-# reinterprets existing state: bucket_by/mode change the state KEY SPACE and
-# row meaning (a per-conv state map read back as bucket state is garbage —
-# Spark cannot detect this because the state schema bytes are identical);
-# window_s/session_gap_s reinterpret persisted window-start arrays.
+# reinterprets existing state (Spark cannot detect it: the state schema bytes
+# are identical): bucket_by re-hashes conversations, mode changes row meaning,
+# window_s/session_gap_s reinterpret window starts. A recorded bucket_by of
+# null (the retired per-conversation layout) never matches, so it is refused.
 _STATE_LAYOUT_FIELDS = ("bucket_by", "mode", "window_s", "session_gap_s")
 
 
@@ -543,12 +432,16 @@ class CheckpointOptionsMismatch(ValueError):
     pass
 
 
-def _guard_checkpoint_options(spark: SparkSession, checkpoint: str, opts: StreamOptions):
+def _guard_checkpoint_options(
+    spark: SparkSession, checkpoint: str, opts: StreamOptions
+) -> StreamOptions:
     """Refuse to resume a checkpoint whose state was written under a
-    different state layout. The fingerprint lives NEXT TO the checkpoint
+    different state layout; return ``opts`` with an unset ``bucket_by``
+    resolved (the recorded count, else ``spark.sql.shuffle.partitions``).
+    The fingerprint lives NEXT TO the checkpoint
     (``<ckpt>/_enpa_options.json``) so it travels with it; written through
     the Hadoop FS so it works on HDFS/S3 checkpoints too. This function
-    only CHECKS — ``_record_checkpoint_options`` runs after the query has
+    writes nothing — ``_record_checkpoint_options`` runs after the query has
     actually started, so a failed first start (bad sink path etc.) does not
     lock options into an empty checkpoint."""
     import json as _json
@@ -556,7 +449,7 @@ def _guard_checkpoint_options(spark: SparkSession, checkpoint: str, opts: Stream
     jvm = spark.sparkContext._jvm
     fpath = jvm.org.apache.hadoop.fs.Path(checkpoint, "_enpa_options.json")
     fs = fpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    current = {f: getattr(opts, f) for f in _STATE_LAYOUT_FIELDS}
+    recorded = None
     if fs.exists(fpath):
         stream = fs.open(fpath)
         try:
@@ -564,6 +457,11 @@ def _guard_checkpoint_options(spark: SparkSession, checkpoint: str, opts: Stream
             recorded = _json.loads(bytes(raw).decode())
         finally:
             stream.close()
+    if not opts.bucket_by:
+        derived = (recorded or {}).get("bucket_by") or _derived_bucket_by(spark)
+        opts = replace(opts, bucket_by=derived)
+    if recorded is not None:
+        current = {f: getattr(opts, f) for f in _STATE_LAYOUT_FIELDS}
         changed = {
             f: (recorded.get(f), current[f])
             for f in _STATE_LAYOUT_FIELDS
@@ -580,6 +478,7 @@ def _guard_checkpoint_options(spark: SparkSession, checkpoint: str, opts: Stream
                 "Either restore the original options or start a NEW "
                 "checkpoint directory (reprocessing the source)."
             )
+    return opts
 
 
 def _record_checkpoint_options(
@@ -611,14 +510,13 @@ def start_stream_ingestion(
     """Full streaming job: CEP core → packet split → idempotent epoch sink.
 
     State store defaults to RocksDB (spill-to-disk, changelog checkpointing)
-    — at 10^12 turns the per-conv dedup/buffer state cannot live in the
+    — at 10^12 turns the dedup/buffer state cannot live in the
     HDFS-backed in-memory map. The provider is per-query-start config and is
     recorded in the checkpoint; resuming keeps whatever the checkpoint used.
     """
     from .sink import make_epoch_sink
 
-    opts = opts or StreamOptions()
-    _guard_checkpoint_options(spark, checkpoint, opts)
+    opts = _guard_checkpoint_options(spark, checkpoint, opts or StreamOptions())
     if rocksdb_state:
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER

@@ -1,10 +1,15 @@
-"""Bucketed stateful assembler (StreamOptions.bucket_by): output equality
-with the per-conversation assembler on multi-epoch out-of-order input, plus
-checkpoint resume. The per-conv path is the oracle — both run the SAME core
-functions, so this guards the state-layout plumbing (pickle blob, bucket-wide
-timeouts, per-conv routing inside a bucket)."""
+"""Bucketed stateful assembler (StreamOptions.bucket_by): output pinned to a
+golden file on multi-epoch out-of-order input, plus checkpoint resume.
+
+``tests/golden/stream_packets_{tumbling,session}.csv`` hold the packet rows
+the retired per-conversation assembler (one state key per conv_id) wrote for
+``_epochs_multiwindow()``; the bucketed layout must reproduce them at any
+bucket count, which guards the state-layout plumbing (pickle blob,
+bucket-wide timeouts, per-conv routing inside a bucket)."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -66,28 +71,28 @@ def _epochs_multiwindow():
     return [e1, e2, e3]
 
 
+GOLDEN = Path(__file__).resolve().parent / "golden"
+
+
 @pytest.mark.slow
+@pytest.mark.parametrize("bucket_by", [None, 7], ids=["derived", "7"])
 @pytest.mark.parametrize("mode_kw", [
     {"mode": "tumbling", "window_s": 3600, "watermark": "30 minutes"},
     {"mode": "session", "session_gap_s": 900, "watermark": "30 minutes"},
 ], ids=["tumbling", "session"])
-def test_bucketed_equals_per_conv(spark, tmp_path, mode_kw):
-    epochs = _epochs_multiwindow()
-    results = {}
-    for name, bucket_by in (("perconv", None), ("bucketed", 7)):
-        inp = str(tmp_path / f"in-{name}")
-        out = str(tmp_path / f"out-{name}")
-        ck = str(tmp_path / f"ck-{name}")
-        _write_epochs(spark, inp, epochs)
-        q = start_stream_ingestion(
-            spark, inp, out, ck,
-            StreamOptions(batch_size=25, max_files_per_trigger=1,
-                          bucket_by=bucket_by, **mode_kw),
-        )
-        q.awaitTermination(240)
-        results[name] = _packets(spark, out)
-    pd.testing.assert_frame_equal(results["perconv"], results["bucketed"])
-    assert len(results["bucketed"]) > 0
+def test_bucketed_matches_golden(spark, tmp_path, mode_kw, bucket_by):
+    inp, out, ck = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    _write_epochs(spark, inp, _epochs_multiwindow())
+    q = start_stream_ingestion(
+        spark, inp, out, ck,
+        StreamOptions(batch_size=25, max_files_per_trigger=1,
+                      bucket_by=bucket_by, **mode_kw),
+    )
+    q.awaitTermination(240)
+    got = _packets(spark, out)
+    golden = pd.read_csv(GOLDEN / f"stream_packets_{mode_kw['mode']}.csv")
+    pd.testing.assert_frame_equal(got, golden.astype(got.dtypes.to_dict()))
+    assert len(got) > 0
 
 
 @pytest.mark.slow

@@ -3,6 +3,7 @@ resilient source option."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -16,6 +17,7 @@ from exposure_notifications_private_analytics_ingestion_spark.streaming import (
 )
 from exposure_notifications_private_analytics_ingestion_spark.streaming.ingest_stream import (
     CheckpointOptionsMismatch,
+    _guard_checkpoint_options,
 )
 
 
@@ -64,6 +66,68 @@ def test_resume_with_changed_state_layout_is_refused(spark, tmp_path):
         spark, inp, out, ckpt, StreamOptions(batch_size=50, bucket_by=64)
     )
     q.awaitTermination(240)
+
+
+def test_per_conversation_checkpoint_is_refused(spark, tmp_path):
+    # the retired per-conversation layout recorded bucket_by: null; its state
+    # must never be read as bucket state, whatever bucket_by is requested
+    inp = str(tmp_path / "in")  # never read: the guard refuses first
+    ckpt = tmp_path / "ck"
+    ckpt.mkdir()
+    (ckpt / "_enpa_options.json").write_text(json.dumps(
+        {"bucket_by": None, "mode": "tumbling", "window_s": 3600,
+         "session_gap_s": 1800}
+    ))
+    for opts in (StreamOptions(batch_size=20), StreamOptions(batch_size=20, bucket_by=4)):
+        with pytest.raises(CheckpointOptionsMismatch, match="bucket_by"):
+            start_stream_ingestion(spark, inp, str(tmp_path / "out"), str(ckpt), opts)
+
+
+@pytest.mark.slow
+def test_default_resume_adopts_recorded_bucket_count(spark, tmp_path):
+    inp, _ = _write_turns(spark, tmp_path)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
+    key = "spark.sql.shuffle.partitions"
+    first = int(spark.conf.get(key))
+
+    q = start_stream_ingestion(spark, inp, out, ckpt, StreamOptions(batch_size=20))
+    q.awaitTermination(240)
+    recorded = json.loads((tmp_path / "ck" / "_enpa_options.json").read_text())
+    assert recorded["bucket_by"] == first  # the resolved integer, never null
+
+    spark.conf.set(key, str(first + 3))
+    try:
+        assert _guard_checkpoint_options(
+            spark, ckpt, StreamOptions()
+        ).bucket_by == first
+        # a fresh checkpoint derives from the session as it is now
+        assert _guard_checkpoint_options(
+            spark, str(tmp_path / "ck-new"), StreamOptions()
+        ).bucket_by == first + 3
+        n_more = _write_turns_more(spark, inp)
+        q = start_stream_ingestion(spark, inp, out, ckpt, StreamOptions(batch_size=20))
+        q.awaitTermination(240)
+        assert q.exception() is None
+        assert sum(p["numInputRows"] for p in q.recentProgress) == n_more
+    finally:
+        spark.conf.set(key, str(first))
+    recorded = json.loads((tmp_path / "ck" / "_enpa_options.json").read_text())
+    assert recorded["bucket_by"] == first
+    pk = spark.read.parquet(f"{out}/packets")
+    assert (
+        pk.groupBy("conv_id", "turn_idx", "destination").count()
+        .filter("count > 1").count()
+        == 0
+    )
+
+
+def _write_turns_more(spark, inp):
+    pdf = generate_turns(n_convs=10, seed=18, hours=2, dup_frac=0.0)
+    pdf["conv_id"] = "more-" + pdf["conv_id"]
+    spark.createDataFrame(pdf, schema=TURNS_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(inp)
+    return len(pdf)
 
 
 @pytest.mark.slow

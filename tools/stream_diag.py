@@ -1,7 +1,10 @@
 """Diagnostic: run the streaming CEP leg once at a given core count and dump
 per-microbatch progress durations (where does the 4N leg lose time?).
 
-Usage: python tools/stream_diag.py <cores> [ck_root] [workdir]
+Usage: python tools/stream_diag.py <cores> [bucket_by] [ck_root] [workdir]
+bucket_by 0 (the default) leaves the state bucket count to the engine,
+which derives it from spark.sql.shuffle.partitions (this tool's session
+sets 64).
 Prints one DIAG json line: wall, n_turns, and per-batch durationMs +
 stateOperators timing.
 """

@@ -12,8 +12,10 @@ Constructs (``--constructs``, comma list):
             merge is scoped to its own hive partitions
 
 Batch-close latency = micro-batch duration from the engine's own progress
-events — "how long after its window can a batch be read downstream". For
-the cdc construct that duration INCLUDES the merge (the sink is the state).
+events (``MetricsListener.batch_close_ms``, over every executed epoch,
+timer-only epochs included) — "how long after its window can a batch be
+read downstream". For the cdc construct that duration INCLUDES the merge
+(the sink is the state).
 
 The run is canary-gated (the shared miniature-job canary from
 ``streaming.canary``): the window verdict rides in the JSON, and budget
@@ -24,6 +26,10 @@ Usage:
   python tools/stream_soak.py [--n-convs 4000] [--waves 25] [--cores 32]
       [--bucket-by 256] [--constructs ingest,cep,sketch,cdc]
       [--record BENCH/stream_soak.json] [--no-canary]
+
+``--bucket-by 0`` leaves the ingest assembler's state bucket count to the
+engine, which derives it from spark.sql.shuffle.partitions (this tool's
+session sets 32).
 
 Per-construct p95 budgets at 4k-conv waves / 32 cores (≈1.2M turns per
 construct at 25 waves) carry ~1.5-2x headroom over HEALTHY-window
@@ -170,14 +176,9 @@ def _soak_one(spark, construct, waves, cores, bucket_by):
         spark.streams.removeListener(ml)
     wall = time.time() - t0
 
+    # the listener drains Spark's event bus first, so read it before ml.progress
+    p50, p95 = ml.batch_close_ms(0.5), ml.batch_close_p95_ms()
     data_epochs = [r for r in ml.progress if r["num_input_rows"] > 0]
-    durations = sorted(r["batch_duration_ms"] for r in data_epochs)
-    p95 = (
-        durations[min(len(durations) - 1, int(0.95 * len(durations)))]
-        if durations
-        else None
-    )
-    p50 = durations[len(durations) // 2] if durations else None
     busy_s = sum(r["batch_duration_ms"] for r in data_epochs) / 1000
     rec = {
         "turns_ingested": total,
@@ -200,7 +201,8 @@ def main():
     ap.add_argument("--n-convs", type=int, default=4000)
     ap.add_argument("--waves", type=int, default=25)
     ap.add_argument("--cores", type=int, default=32)
-    ap.add_argument("--bucket-by", type=int, default=256)
+    ap.add_argument("--bucket-by", type=int, default=256,
+                    help="ingest state buckets; 0 = derived by the engine")
     ap.add_argument("--constructs", default="ingest")
     ap.add_argument("--record", default=None,
                     help="also write the JSON to this path (e.g. BENCH/stream_soak.json)")
