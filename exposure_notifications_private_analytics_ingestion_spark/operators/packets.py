@@ -11,11 +11,14 @@ destinations carry the same uuid set with equal r_pit.
 Spark shape: ``posexplode`` on the shares array — a pure narrow transform, no
 shuffle, fully codegen'd (Generate node). uuid = ``conv_id#turn_idx``
 (FIXTURES.md §4).
+
+W2 — ``header_digests`` is the per-(batch, destination) manifest core both
+the batch job and the streaming sink build their headers on.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,11 +29,21 @@ def turn_uuid() -> F.Column:
     return F.concat_ws("#", F.col("conv_id"), F.col("turn_idx").cast("string"))
 
 
-def split_packets(df: DataFrame, payload_col: str = "encrypted_shares") -> DataFrame:
+def split_packets(
+    df: DataFrame,
+    payload_col: str = "encrypted_shares",
+    carry: tuple[str, ...] = ("conv_id", "turn_idx", "ts"),
+) -> DataFrame:
     """Valid turns (with a 2-element shares array) → 2 packet rows each.
 
     If ``payload_col`` is absent (plain transcript turns), both forks carry
     the turn text bytes — the graft's per-turn parity column.
+
+    Output: ``batch_id, destination, uuid, r_pit, encrypted_payload`` and the
+    three nulled reference fields, then the ``carry`` columns copied through
+    unchanged (they must exist in ``df``; the batch job carries the turn's
+    ``ts``, the streaming sink its closed-batch bookkeeping), then the
+    batch's Prio fields when ``df`` has ``prio_params``.
     """
     if payload_col in df.columns:
         exploded = df.select(
@@ -44,7 +57,9 @@ def split_packets(df: DataFrame, payload_col: str = "encrypted_shares") -> DataF
         )
         payload = F.encode(F.col("text"), "UTF-8")
 
-    dest = F.when(F.col("_pos") == 0, F.lit("pha")).otherwise(F.lit("facilitator"))
+    dest = F.when(F.col("_pos") == 0, F.lit(DESTINATIONS[0])).otherwise(
+        F.lit(DESTINATIONS[1])
+    )
     cols = [
         F.col("batch_id"),
         dest.alias("destination"),
@@ -54,9 +69,7 @@ def split_packets(df: DataFrame, payload_col: str = "encrypted_shares") -> DataF
         F.lit(None).cast(T.StringType()).alias("encryption_key_id"),
         F.lit(None).cast(T.StringType()).alias("version_configuration"),
         F.lit(None).cast(T.BinaryType()).alias("device_nonce"),
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        F.col("ts"),
+        *carry,
     ]
     if "prio_params" in df.columns:
         # carry the batch's Prio metadata to the header stage — the reference
@@ -69,3 +82,31 @@ def split_packets(df: DataFrame, payload_col: str = "encrypted_shares") -> DataF
             F.col("prio_params.prime").cast("long").alias("prime"),
         ]
     return exploded.select(*cols)
+
+
+def header_digests(packets: DataFrame, *aggs: Column) -> DataFrame:
+    """One row per ``(batch_id, destination)`` of ``packets``: ``name`` (the
+    batch's conversation), ``n_packets``, the caller's own ``aggs``, and
+    ``packet_file_digest`` — sha256 over the batch's ``uuid:hex(payload)``
+    strings concatenated in sorted order, so the digest is replay-stable
+    regardless of shuffle order (``pipeline/BatchWriterFn.java:211-216``,
+    ``PrioSerializationHelper.java:90-104``). collect_list is bounded by
+    batch_size (the reference's own memory rationale,
+    ``BatchWriterFn.java:120``). Exchange-free on input partitioned by
+    batch_id."""
+    entry = F.struct("uuid", F.hex("encrypted_payload").alias("payload_hex"))
+    return packets.groupBy("batch_id", "destination").agg(
+        F.first("conv_id").alias("name"),
+        F.count("*").alias("n_packets"),
+        *aggs,
+        F.sha2(
+            F.concat_ws(
+                "",
+                F.transform(
+                    F.array_sort(F.collect_list(entry)),
+                    lambda s: F.concat(s["uuid"], F.lit(":"), s["payload_hex"]),
+                ),
+            ),
+            256,
+        ).alias("packet_file_digest"),
+    )

@@ -34,7 +34,7 @@ from ..operators.batching import (
     dedup_window_chunk,
 )
 from ..operators.dedup import dedup_turns_deterministic
-from ..operators.packets import split_packets
+from ..operators.packets import header_digests, split_packets
 from ..operators.window_filter import window_filter
 from ..model.schema import NUMBER_OF_SERVERS, PRIME
 
@@ -154,85 +154,39 @@ def process_turns(df: DataFrame, opts: IngestionOptions) -> tuple[DataFrame, Dat
 
 def build_headers(packets: DataFrame, opts: IngestionOptions) -> DataFrame:
     """W2 — one header per (batch, destination) with the SHA-256 digest of the
-    batch's serialized packets (``pipeline/BatchWriterFn.java:211-216``,
-    ``PrioSerializationHelper.java:90-104``) and the deterministic output path
-    ``{dest}/{name}/YYYY/MM/dd/HH/mm/{batch_id}``
+    batch's serialized packets (``operators.packets.header_digests``) and the
+    deterministic output path ``{dest}/{name}/YYYY/MM/dd/HH/mm/{batch_id}``
     (``BatchWriterFn.java:135-150``, asserted in IngestionPipelineIT.java:642-657).
-
-    Digest = sha256 over packets sorted by (uuid) — replay-stable regardless
-    of shuffle order. collect_list is bounded by batch_size (the reference's
-    own memory rationale, ``BatchWriterFn.java:120``).
     """
-    name_col = F.col("conv_id")
     has_prio = "bins" in packets.columns
-    prio_select = (
-        ["bins", "epsilon", "hamming_weight", "prime"] if has_prio else []
-    )
-    per_packet = packets.select(
-        "batch_id",
-        "destination",
-        name_col.alias("name"),
-        "uuid",
-        F.hex(F.col("encrypted_payload")).alias("payload_hex"),
-        "ts",
-        *prio_select,
+    prio_aggs = (
+        [F.first(c).alias(f"_{c}") for c in ("bins", "epsilon", "hamming_weight", "prime")]
+        if has_prio
+        else []
     )
     window_start = F.lit(opts.window_start_s).cast("long")
     window_end = F.lit(opts.window_start_s + opts.duration_s).cast("long")
     ts_path = F.from_unixtime(window_start, "yyyy/MM/dd/HH/mm")
-    prio_aggs = (
-        [
-            F.first("bins").alias("_bins"),
-            F.first("epsilon").alias("_epsilon"),
-            F.first("hamming_weight").alias("_hamming_weight"),
-            F.first("prime").alias("_prime"),
-        ]
-        if has_prio
-        else []
+    return header_digests(packets, *prio_aggs).select(
+        "batch_id",
+        "name",
+        window_start.alias("batch_start_time"),
+        window_end.alias("batch_end_time"),
+        F.lit(NUMBER_OF_SERVERS).alias("number_of_servers"),
+        # header metadata reflects the batch's own prio_params when the
+        # input carries them (BatchWriterFn.java:152-176); the literals
+        # are the plain-transcript defaults (ENPA deployment values)
+        (F.col("_bins") if has_prio else F.lit(2)).alias("bins"),
+        (F.col("_hamming_weight") if has_prio else F.lit(1)).alias("hamming_weight"),
+        (F.col("_prime") if has_prio else F.lit(PRIME)).alias("prime"),
+        (F.col("_epsilon") if has_prio else F.lit(5.2933)).alias("epsilon"),
+        "packet_file_digest",
+        F.concat_ws(
+            "/", F.col("destination"), F.col("name"), ts_path, F.col("batch_id")
+        ).alias("path"),
+        "n_packets",
+        "destination",
     )
-    agg = (
-        per_packet.groupBy("batch_id", "destination")
-        .agg(
-            F.first("name").alias("name"),
-            F.count("*").alias("n_packets"),
-            *prio_aggs,
-            F.sha2(
-                F.concat_ws(
-                    "",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("uuid", "payload_hex"))
-                        ),
-                        lambda s: F.concat(s["uuid"], F.lit(":"), s["payload_hex"]),
-                    ),
-                ),
-                256,
-            ).alias("packet_file_digest"),
-        )
-        .select(
-            "batch_id",
-            "name",
-            window_start.alias("batch_start_time"),
-            window_end.alias("batch_end_time"),
-            F.lit(NUMBER_OF_SERVERS).alias("number_of_servers"),
-            # header metadata reflects the batch's own prio_params when the
-            # input carries them (BatchWriterFn.java:152-176); the literals
-            # are the plain-transcript defaults (ENPA deployment values)
-            (F.col("_bins") if has_prio else F.lit(2)).alias("bins"),
-            (F.col("_hamming_weight") if has_prio else F.lit(1)).alias(
-                "hamming_weight"
-            ),
-            (F.col("_prime") if has_prio else F.lit(PRIME)).alias("prime"),
-            (F.col("_epsilon") if has_prio else F.lit(5.2933)).alias("epsilon"),
-            "packet_file_digest",
-            F.concat_ws(
-                "/", F.col("destination"), F.col("name"), ts_path, F.col("batch_id")
-            ).alias("path"),
-            "n_packets",
-            "destination",
-        )
-    )
-    return agg
 
 
 def build_signatures(

@@ -10,25 +10,26 @@ replaces exactly its own files.
 On Iceberg this is one ``MERGE INTO``/``overwriteByFilter`` transaction; on
 the parquet stand-in it's dynamic partition overwrite on ``epoch=<id>``.
 
-Each epoch writes:
-- ``packets/`` — ×2 fan-out rows (pha + facilitator)
-- ``batch_headers/`` — per-(batch, destination) manifest with sha256 digest
-- ``lineage/`` — per-epoch provenance: epoch id, batch ids, row counts,
-  ts bounds (the north_rule's per-partition lineage record)
+Each epoch writes, with the batch job's own builders
+(``operators.packets``), so stream and batch output agree on the same input
+(``tests/test_stream_batch_parity.py``):
+- ``packets/`` — ×2 fan-out rows (pha + facilitator) from ``split_packets``,
+  in the batch packet schema, carrying the closed-batch bookkeeping columns
+- ``batch_headers/`` — per-(batch, destination) manifest with the
+  packet-file digest from ``header_digests``
+- ``lineage/`` — per-epoch provenance: epoch id, exact row, batch and
+  conversation counts, ts bounds (the north_rule's per-partition lineage
+  record)
 
-Plan shape (the scaling-critical part): ONE shuffle per epoch — the closed
-TURN rows are repartitioned by batch_id with an EXPLICIT partition count
-(AQE would otherwise coalesce the repartition-by-column to a handful of
-partitions and cap the downstream parquet/digest parallelism — measured as a
-flat ~25 s sink at every core count) and cached PRE-explode. The ×2
-destination fan-out is a narrow Generate on top of that cache, so the
-parquet write inherits the batch_id partitioning; the header digest
-aggregates the cached turn rows exchange-free and is computed ONCE per batch
-— both destinations of a transcript-mode packet carry the same
-(uuid, payload) bytes by construction (``_split_packets_streamed``), so the
-per-destination digests are identical and the destination column is fanned
-out AFTER the aggregation. Relative to digesting the exploded packets this
-halves the cache bytes, the digest input, and the aggregate group count.
+Plan shape: ONE shuffle per epoch — the closed turn rows are repartitioned
+by batch_id with an EXPLICIT partition count (AQE would otherwise coalesce
+the repartition-by-column to a handful of partitions and cap the downstream
+parquet/digest parallelism — measured as a flat ~25 s sink at every core
+count) and cached. The lineage aggregate is the epoch's first action: it
+fills the cache and answers the emptiness check in the same job. The ×2
+fan-out is a narrow Generate on top of the cache, so the packet write and
+the per-(batch, destination) digest both inherit the batch_id partitioning
+and run exchange-free.
 """
 
 from __future__ import annotations
@@ -40,92 +41,10 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DESTINATIONS = ("pha", "facilitator")
+from ..operators.packets import header_digests, split_packets
 
-
-def _closed_turns(batch_df: DataFrame) -> DataFrame:
-    """One row per closed turn, with the packet uuid and payload bytes —
-    the pre-explode form both the packet write and the header digest share."""
-    return batch_df.select(
-        "batch_id",
-        F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")).alias("uuid"),
-        F.encode("text", "UTF-8").alias("encrypted_payload"),
-        "conv_id",
-        "turn_idx",
-        "ts_ms",
-        "window_start_s",
-        "batch_ordinal",
-        "close_reason",
-    )
-
-
-def _split_packets_streamed(closed: DataFrame) -> DataFrame:
-    """X1 fan-out over closed turn rows: narrow Generate, preserves the
-    batch_id partitioning of its input."""
-    exploded = closed.select(
-        "*", F.posexplode(F.array(F.lit(0), F.lit(1))).alias("_pos", "_i")
-    )
-    dest = F.when(F.col("_pos") == 0, F.lit(DESTINATIONS[0])).otherwise(
-        F.lit(DESTINATIONS[1])
-    )
-    cols = [c for c in closed.columns if c not in ("_pos", "_i")]
-    front = ["batch_id", "uuid", "encrypted_payload"]
-    rest = [c for c in cols if c not in front]
-    return exploded.select(
-        "batch_id",
-        dest.alias("destination"),
-        "uuid",
-        "encrypted_payload",
-        *rest,
-    )
-
-
-def _headers(closed: DataFrame) -> DataFrame:
-    """Per-(batch, destination) manifest. Digest = sha256 over
-    ``uuid:hex(payload)`` sorted — computed once per batch over the TURN
-    rows (both destinations carry identical bytes in transcript mode), then
-    fanned out per destination. Exchange-free on batch_id partitioning."""
-    per_batch = (
-        closed.select(
-            "batch_id",
-            "conv_id",
-            "window_start_s",
-            "uuid",
-            F.hex("encrypted_payload").alias("ph"),
-            "ts_ms",
-        )
-        .groupBy("batch_id")
-        .agg(
-            F.first("conv_id").alias("name"),
-            F.first("window_start_s").alias("batch_start_time"),
-            F.count("*").alias("n_packets"),
-            F.min("ts_ms").alias("min_ts_ms"),
-            F.max("ts_ms").alias("max_ts_ms"),
-            F.sha2(
-                F.concat_ws(
-                    "",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("uuid", "ph"))),
-                        lambda s: F.concat(s["uuid"], F.lit(":"), s["ph"]),
-                    ),
-                ),
-                256,
-            ).alias("packet_file_digest"),
-        )
-    )
-    dest = F.explode(
-        F.array(*[F.lit(d) for d in DESTINATIONS])
-    ).alias("destination")
-    return per_batch.select(
-        "batch_id",
-        dest,
-        "name",
-        "batch_start_time",
-        "n_packets",
-        "min_ts_ms",
-        "max_ts_ms",
-        "packet_file_digest",
-    )
+# closed-batch bookkeeping the packet rows carry through the fan-out
+CARRY = ("conv_id", "turn_idx", "ts_ms", "window_start_s", "batch_ordinal", "close_reason")
 
 
 def make_epoch_sink(output_root: str):
@@ -133,19 +52,23 @@ def make_epoch_sink(output_root: str):
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # NOTE: no isEmpty() pre-check — in foreachBatch EVERY action on
-        # batch_df re-executes the stateful microbatch plan, so an emptiness
-        # probe would run the whole assembler once just to answer a boolean
-        # (measured: ~2× epoch cost). Persist first, count the cache instead.
-        # The EXPLICIT partition count pins the shuffle width (AQE coalesces
-        # a repartition-by-column, capping downstream parallelism).
+        # NOTE: in foreachBatch EVERY action on batch_df re-executes the
+        # stateful microbatch plan, so persist first and run every action,
+        # the emptiness check included, against the cache. The EXPLICIT
+        # partition count pins the shuffle width (AQE coalesces a
+        # repartition-by-column, capping downstream parallelism).
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        closed = (
-            _closed_turns(batch_df)
-            .repartition(n_part, "batch_id")
-            .persist()
-        )
-        if closed.count() == 0:
+        closed = batch_df.repartition(n_part, "batch_id").persist()
+        # lineage stats double as the emptiness check: one job fills the
+        # cache and yields every count
+        stats = closed.agg(
+            F.count("*").alias("n_rows"),
+            F.count_distinct("batch_id").alias("n_batches"),
+            F.count_distinct("conv_id").alias("n_convs"),
+            F.min("ts_ms").alias("min_ts_ms"),
+            F.max("ts_ms").alias("max_ts_ms"),
+        ).collect()[0]
+        if stats["n_rows"] == 0:
             closed.unpersist()
             return
         # exactly-once via DIRECT epoch-directory overwrite: the write targets
@@ -154,35 +77,34 @@ def make_epoch_sink(output_root: str):
         # staging-and-move pass over the whole table, no driver-side serial
         # file shuffling across epochs. Readers see the identical hive layout
         # (epoch=<id>/destination=<d>) via partition discovery.
+        packets = split_packets(closed, carry=CARRY)
         (
-            _split_packets_streamed(closed)
-            .write.mode("overwrite")
+            packets.write.mode("overwrite")
             .partitionBy("destination")
             .parquet(f"{output_root}/packets/epoch={epoch_id}")
         )
-        headers = _headers(closed)
+        headers = header_digests(
+            packets,
+            F.first("window_start_s").alias("batch_start_time"),
+            F.min("ts_ms").alias("min_ts_ms"),
+            F.max("ts_ms").alias("max_ts_ms"),
+        ).select(
+            "batch_id",
+            "destination",
+            "name",
+            "batch_start_time",
+            "n_packets",
+            "min_ts_ms",
+            "max_ts_ms",
+            "packet_file_digest",
+        )
         headers.write.mode("overwrite").parquet(
             f"{output_root}/batch_headers/epoch={epoch_id}"
         )
         # lineage: one JSON record per epoch (atomic rename for idempotence);
         # turn-level rows, so each turn counts once
-        stats = closed.agg(
-            F.count("*").alias("n_rows"),
-            F.approx_count_distinct("batch_id").alias("n_batches"),
-            F.min("ts_ms").alias("min_ts_ms"),
-            F.max("ts_ms").alias("max_ts_ms"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-        ).collect()[0]
         os.makedirs(f"{output_root}/lineage", exist_ok=True)
-        rec = {
-            "epoch": epoch_id,
-            "n_rows": stats["n_rows"],
-            "n_batches": stats["n_batches"],
-            "n_convs": stats["n_convs"],
-            "min_ts_ms": stats["min_ts_ms"],
-            "max_ts_ms": stats["max_ts_ms"],
-            "wall_time": time.time(),
-        }
+        rec = {"epoch": epoch_id, **stats.asDict(), "wall_time": time.time()}
         tmp = f"{output_root}/lineage/.epoch-{epoch_id}.tmp"
         with open(tmp, "w") as f:
             json.dump(rec, f)
