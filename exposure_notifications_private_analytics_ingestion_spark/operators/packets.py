@@ -92,8 +92,7 @@ def header_digests(packets: DataFrame, *aggs: Column) -> DataFrame:
     regardless of shuffle order (``pipeline/BatchWriterFn.java:211-216``,
     ``PrioSerializationHelper.java:90-104``). collect_list is bounded by
     batch_size (the reference's own memory rationale,
-    ``BatchWriterFn.java:120``). Exchange-free on input partitioned by
-    batch_id."""
+    ``BatchWriterFn.java:120``)."""
     entry = F.struct("uuid", F.hex("encrypted_payload").alias("payload_hex"))
     return packets.groupBy("batch_id", "destination").agg(
         F.first("conv_id").alias("name"),

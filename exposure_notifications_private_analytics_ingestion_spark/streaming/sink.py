@@ -10,7 +10,7 @@ replaces exactly its own files.
 On Iceberg this is one ``MERGE INTO``/``overwriteByFilter`` transaction; on
 the parquet stand-in it's dynamic partition overwrite on ``epoch=<id>``.
 
-Each epoch writes, with the batch job's own builders
+Each epoch writes, with the batch job's own packet and header functions
 (``operators.packets``), so stream and batch output agree on the same input
 (``tests/test_stream_batch_parity.py``):
 - ``packets/`` — ×2 fan-out rows (pha + facilitator) from ``split_packets``,
@@ -27,9 +27,10 @@ the repartition-by-column to a handful of partitions and cap the downstream
 parquet/digest parallelism — measured as a flat ~25 s sink at every core
 count) and cached. The lineage aggregate is the epoch's first action: it
 fills the cache and answers the emptiness check in the same job. The ×2
-fan-out is a narrow Generate on top of the cache, so the packet write and
-the per-(batch, destination) digest both inherit the batch_id partitioning
-and run exchange-free.
+fan-out is a narrow Generate on top of the cache, so the packet write
+inherits the batch_id partitioning, and the packet write and the
+per-(batch, destination) digest both read the cache instead of re-running
+the stateful micro-batch.
 """
 
 from __future__ import annotations
